@@ -553,8 +553,8 @@ def ab_metric_cuped_adjustment(spark, sf_dir):
     description="Incremental CUPED readout: the experiment metric state "
     "— per-(user, arm) exact decimal covariate/metric sums — is "
     "maintained across span-derived weekly event batches by the shared "
-    "ledgered sum-merge (streaming/sketch_maintenance.ledgered_sum_"
-    "merge_batched: sum-merge is NOT idempotent, so exactly-once lives in the "
+    "ledgered merge (streaming/sketch_maintenance.ledgered_merge with "
+    "F.sum: sum-merge is NOT idempotent, so exactly-once lives in the "
     "applied-batch ledger committed atomically with the state — the "
     "same design point as the CMS sketch, fourth member of the merge-"
     "algebra family), then the CUPED readout runs on the MAINTAINED "
@@ -578,7 +578,7 @@ def streaming_ab_moments_maintenance(spark, sf_dir):
         _weekly_bounds,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge_batched,
+        ledgered_merge,
     )
 
     ev = T(spark, sf_dir, "events")
@@ -604,14 +604,13 @@ def streaming_ab_moments_maintenance(spark, sf_dir):
         exp_start,
         extra=("__bid",),
     )
-    merged = ledgered_sum_merge_batched(
+    merged = ledgered_merge(
         spark,
         state,
         inc,
         batch_ids=list(range(len(weeks) - 1)),
         key_cols=["user_id", "arm"],
-        sum_cols=["x", "y"],
-        collect_note="O(users) narrow metric-state rows",
+        aggs=[F.sum("x").alias("x"), F.sum("y").alias("y")],
     )
     # merge widened the decimals (sum(DECIMAL(18,6)) -> (28,6)); restore
     # the per-user schema the readout's moment casts expect
@@ -1949,8 +1948,8 @@ def ab_ratio_metric_delta_method(spark, sf_dir):
     "week state — (first experiment-period event week, first "
     "qualifying-purchase week, last event week) — is maintained across "
     "span-derived weekly event batches by the IDEMPOTENT min/max merge "
-    "(streaming/sketch_maintenance.ledgered_minmax_merge_batched — fifth "
-    "member of the merge-algebra family, and the first where replay is "
+    "(streaming/sketch_maintenance.ledgered_merge with F.min/F.max — "
+    "the one ledgered core every maintenance query shares; replay is "
     "a no-op BY ALGEBRA, not by ledger: min/min/max are idempotent, so "
     "the applied-batch ledger is a skip-work optimization; pinned by a "
     "test that force-remerges past the ledger and gets identical "
@@ -1972,7 +1971,7 @@ def streaming_ab_msprt_maintenance(spark, sf_dir):
         _weekly_bounds,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_minmax_merge_batched,
+        ledgered_merge,
     )
 
     ev = T(spark, sf_dir, "events")
@@ -1998,15 +1997,17 @@ def streaming_ab_msprt_maintenance(spark, sf_dir):
         exp_start,
         extra=("__bid",),
     )
-    merged = ledgered_minmax_merge_batched(
+    merged = ledgered_merge(
         spark,
         state,
         inc,
         batch_ids=list(range(len(weeks) - 1)),
         key_cols=["user_id", "arm"],
-        min_cols=["enroll_week", "conv_week"],
-        max_cols=["last_week"],
-        collect_note="O(users) narrow week-state rows",
+        aggs=[
+            F.min("enroll_week").alias("enroll_week"),
+            F.min("conv_week").alias("conv_week"),
+            F.max("last_week").alias("last_week"),
+        ],
     )
     return _msprt_readout(spark, merged)
 

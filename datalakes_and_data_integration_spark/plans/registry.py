@@ -199,7 +199,7 @@ def register(
 # BATCH 5: streaming_ab_msprt_maintenance (new; the idempotent
 # min/max-merge twin) — ab_sequential_msprt also changed (readout
 # extracted to the shared _msprt_readout; re-gated triple-SF + bare)
-# and the ledgered_sum_merge -> _ledgered_merge extraction touches the
+# and the sum-merge -> shared ledger-core extraction touches the
 # three sum-merge consumers, all ALREADY in ROUND_CHANGED this round
 # (re-gated at sf0.001 in-session). streaming_stream_stream_join
 # yields. 24 + 26 = 50.

@@ -2498,7 +2498,10 @@ def er_quality_threshold_sweep(spark, sf_dir):
         .persist()  # scale-ok: bounded (score, ok, cand) grid
     )
     per_score = grid.filter(F.col("cand")).select("score", "ok", "c")
-    total = grid.agg(F.sum("c").cast("long").alias("n_true"))
+    # coalesce: an empty ER result sums to NULL, the oracle's count(*) to 0
+    total = grid.agg(
+        F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_true")
+    )
     probes = spark.createDataFrame(
         [(t,) for t in _ER_SWEEP_TS], "threshold long"
     )

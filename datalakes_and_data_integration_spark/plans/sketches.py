@@ -864,7 +864,7 @@ def bitmap_word_rows(df, group_col: str, key_col: str, extra: tuple = ()):
     """(grp, w, bits) 63-bit bitmap word file for distinct ``key_col``
     per ``group_col`` — THE single copy of the word-building idiom
     (bitmap_distinct_rollup, the rolling-window query, and the
-    streaming maintenance module all route through it, so the
+    streaming maintenance query all route through it, so the
     maintained state can never fork from the query path). ``extra``
     names pass-through grouping columns (the batched maintenance path
     labels rows with a batch id and builds every weekly word-file

@@ -1359,7 +1359,8 @@ def _ccf_readout(spark, daily_dec):
     description="Incremental lead-lag cross-correlation: the per-day "
     "exact decimal (view, purchase) value sums are maintained across "
     "span-derived weekly event batches by the shared ledgered "
-    "sum-merge (per-day sums are purely additive — the same merge "
+    "sum-merge (streaming/sketch_maintenance.ledgered_merge with F.sum; "
+    "per-day sums are purely additive — the same merge "
     "algebra as the histogram-quantile and A/B-moment state; "
     "exactly-once lives in the atomic sketch+ledger commit), then the "
     "full [-7, +7] CCF is read from the MAINTAINED state through the "
@@ -1380,7 +1381,7 @@ def streaming_ccf_maintenance(spark, sf_dir):
         _weekly_bounds,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge_batched,
+        ledgered_merge,
     )
 
     ev = T(spark, sf_dir, "events").select("event_type", "value", "ts")
@@ -1398,13 +1399,12 @@ def streaming_ccf_maintenance(spark, sf_dir):
     inc = _ccf_daily_dec(
         ev.withColumn("__bid", _week_bid(weeks)), extra=("__bid",)
     )
-    daily = ledgered_sum_merge_batched(
+    daily = ledgered_merge(
         spark,
         state,
         inc,
         batch_ids=list(range(len(weeks) - 1)),
         key_cols=["di"],
-        sum_cols=["x", "y"],
-        collect_note="O(span days) state rows",
+        aggs=[F.sum("x").alias("x"), F.sum("y").alias("y")],
     )
     return _ccf_readout(spark, daily)

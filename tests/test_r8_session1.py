@@ -242,7 +242,7 @@ def test_streaming_ab_state_replay_is_ledger_noop(spark, tmp_path):
         ab_metric_cuped_adjustment,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge,
+        ledgered_merge,
     )
 
     ev = T(spark, SF, "events")
@@ -250,16 +250,19 @@ def test_streaming_ab_state_replay_is_ledger_noop(spark, tmp_path):
     state = str(tmp_path / "abstate")
     b1 = ev.filter(F.col("event_id") % 2 == 0)
     b2 = ev.filter(F.col("event_id") % 2 == 1)
-    for i, b in enumerate((b1, b2)):
-        merged = ledgered_sum_merge(
-            spark, state, _ab_per_user(b, exp_start), i,
-            key_cols=["user_id", "arm"], sum_cols=["x", "y"],
+
+    def merge_one(b, bid):
+        return ledgered_merge(
+            spark, state,
+            _ab_per_user(b, exp_start).withColumn("__bid", F.lit(bid)),
+            batch_ids=[bid], key_cols=["user_id", "arm"],
+            aggs=[F.sum("x").alias("x"), F.sum("y").alias("y")],
         )
+
+    for i, b in enumerate((b1, b2)):
+        merged = merge_one(b, i)
     before = sorted(map(tuple, merged.collect()))
-    replay = ledgered_sum_merge(
-        spark, state, _ab_per_user(b1, exp_start), 0,
-        key_cols=["user_id", "arm"], sum_cols=["x", "y"],
-    )
+    replay = merge_one(b1, 0)
     assert sorted(map(tuple, replay.collect())) == before
 
     per_user = replay.select(

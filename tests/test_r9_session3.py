@@ -227,7 +227,7 @@ def test_quantile_state_batching_invariant(spark, tmp_path):
         _weekly_bounds,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge,
+        ledgered_merge,
     )
 
     ev = T(spark, SF, "events").select("value", "ts")
@@ -239,18 +239,25 @@ def test_quantile_state_batching_invariant(spark, tmp_path):
             .agg(F.count("*").cast("long").alias("cnt"))
         )
 
+    def merge_one(state, batch, bid):
+        return ledgered_merge(
+            spark,
+            state,
+            batch.withColumn("__bid", F.lit(bid)),
+            batch_ids=[bid],
+            key_cols=["b"],
+            aggs=[F.sum("cnt").alias("cnt")],
+        )
+
     weekly_state = str(tmp_path / "weekly")
     hist = None
     weeks = _weekly_bounds(ev)
     assert len(weeks) >= 3  # the fixture really spans multiple weeks
     for i, (lo, hi) in enumerate(zip(weeks, weeks[1:])):
-        hist = ledgered_sum_merge(
-            spark,
+        hist = merge_one(
             weekly_state,
             hist_batch(ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))),
-            batch_id=i,
-            key_cols=["b"],
-            sum_cols=["cnt"],
+            i,
         )
     weekly = {
         r.q: (r.n, r.est_value)
@@ -258,14 +265,7 @@ def test_quantile_state_batching_invariant(spark, tmp_path):
     }
 
     single_state = str(tmp_path / "single")
-    single_hist = ledgered_sum_merge(
-        spark,
-        single_state,
-        hist_batch(ev),
-        batch_id=0,
-        key_cols=["b"],
-        sum_cols=["cnt"],
-    )
+    single_hist = merge_one(single_state, hist_batch(ev), 0)
     single = {
         r.q: (r.n, r.est_value)
         for r in _sqm_readout(spark, single_hist).collect()
@@ -273,13 +273,10 @@ def test_quantile_state_batching_invariant(spark, tmp_path):
     assert weekly == single and set(weekly) == {0.5, 0.9, 0.99}
 
     # replayed batch id: state (and readout) untouched
-    replayed = ledgered_sum_merge(
-        spark,
+    replayed = merge_one(
         weekly_state,
         hist_batch(ev),  # would double-count if the ledger failed
-        batch_id=0,
-        key_cols=["b"],
-        sum_cols=["cnt"],
+        0,
     )
     after = {
         r.q: (r.n, r.est_value)
@@ -909,24 +906,31 @@ def test_ccf_maintained_state_is_batching_invariant(spark, tmp_path):
         daily_cross_correlation,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_sum_merge,
+        ledgered_merge,
     )
 
     ev = T(spark, SF, "events").select("event_type", "value", "ts")
     weekly_state = str(tmp_path / "weekly")
+
+    def merge_one(batch, bid):
+        return ledgered_merge(
+            spark,
+            weekly_state,
+            batch.withColumn("__bid", F.lit(bid)),
+            batch_ids=[bid],
+            key_cols=["di"],
+            aggs=[F.sum("x").alias("x"), F.sum("y").alias("y")],
+        )
+
     daily = None
     for i, (lo, hi) in enumerate(
         zip(_weekly_bounds(ev), _weekly_bounds(ev)[1:])
     ):
-        daily = ledgered_sum_merge(
-            spark,
-            weekly_state,
+        daily = merge_one(
             _ccf_daily_dec(
                 ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
             ),
-            batch_id=i,
-            key_cols=["di"],
-            sum_cols=["x", "y"],
+            i,
         )
     weekly = {
         r.lag: (r.n_days, r.ccf_r)
@@ -938,13 +942,9 @@ def test_ccf_maintained_state_is_batching_invariant(spark, tmp_path):
     }
     assert weekly == batch and len(weekly) == 15
 
-    replayed = ledgered_sum_merge(
-        spark,
-        weekly_state,
+    replayed = merge_one(
         _ccf_daily_dec(ev),  # would double every day if the ledger failed
-        batch_id=0,
-        key_cols=["di"],
-        sum_cols=["x", "y"],
+        0,
     )
     after = {
         r.lag: (r.n_days, r.ccf_r)

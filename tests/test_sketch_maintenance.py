@@ -1,12 +1,42 @@
-"""Streaming HLL maintenance: incrementally merged register files equal
-the batch-built registers over the union of the data — the property that
-makes the sketch the 100 TB answer to continuous distinct counting."""
+"""Streaming sketch maintenance through the one ledgered merge core:
+the CMS sketch (sum: exactly-once only behind the ledger), the exact-
+distinct bitmap words (bit_or: idempotent by algebra) and per-key
+min/max state each equal the batch-built state over the union of the
+data, and a replayed batch id is a no-op."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
+
+from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
+    ledgered_merge,
+)
+
+# (key_cols, aggs) per state family; the aggs are built lazily because
+# a Column needs the live session the spark fixture starts
+_CMS = (["seed", "bucket"], lambda: [F.sum("total").alias("total")])
+_BITMAP = (["grp", "w"], lambda: [F.expr("bit_or(bits)").alias("bits")])
+_MINMAX = (
+    ["user_id", "arm"],
+    lambda: [
+        F.min("enroll_week").alias("enroll_week"),
+        F.min("conv_week").alias("conv_week"),
+        F.max("last_week").alias("last_week"),
+    ],
+)
+
+
+def _merge_one(spark, state, batch, bid, family):
+    """One batch committed under a single ledger id."""
+    key_cols, aggs = family
+    return ledgered_merge(
+        spark,
+        state,
+        batch.withColumn("__bid", F.lit(bid)),
+        batch_ids=[bid],
+        key_cols=key_cols,
+        aggs=aggs(),
+    )
 
 
 def _events(spark, sf="/root/testdata/sf0.001"):
@@ -15,82 +45,13 @@ def _events(spark, sf="/root/testdata/sf0.001"):
     return T(spark, sf, "events").select("event_type", "user_id", "event_id")
 
 
-def test_incremental_merge_equals_batch(spark):
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        hll_registers,
-        merge_hll_state,
-    )
-
-    ev = _events(spark)
-    b1 = ev.filter(F.col("event_id") % 2 == 0)
-    b2 = ev.filter(F.col("event_id") % 2 == 1)
-
-    state = tempfile.mkdtemp(prefix="hllstate_") + "/regs"
-    merge_hll_state(spark, state, hll_registers(b1, "event_type", "user_id"))
-    merged = merge_hll_state(
-        spark, state, hll_registers(b2, "event_type", "user_id")
-    )
-
-    batch = hll_registers(ev, "event_type", "user_id")
-    m = {(r.grp, r.reg): r.mrho for r in merged.collect()}
-    b = {(r.grp, r.reg): r.mrho for r in batch.collect()}
-    assert m == b
-
-
-def test_redelivery_is_noop(spark):
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        hll_registers,
-        merge_hll_state,
-    )
-
-    ev = _events(spark)
-    state = tempfile.mkdtemp(prefix="hllstate_") + "/regs"
-    regs = hll_registers(ev, "event_type", "user_id")
-    first = {
-        (r.grp, r.reg): r.mrho
-        for r in merge_hll_state(spark, state, regs).collect()
-    }
-    again = {
-        (r.grp, r.reg): r.mrho
-        for r in merge_hll_state(spark, state, regs).collect()
-    }
-    assert first == again
-
-
-def test_estimate_matches_query_path(spark):
-    """The maintained-state estimate equals distinct_count_hll's estimate
-    for the same data (same hash family, same correction)."""
-    from datalakes_and_data_integration_spark.plans import all_queries
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        hll_estimate,
-        hll_registers,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    ev = _events(spark, sf)
-    est = {
-        r.grp: r.hll_est
-        for r in hll_estimate(
-            hll_registers(ev, "event_type", "user_id")
-        ).collect()
-    }
-    ref = {
-        r.event_type: r.hll_est
-        for r in all_queries()["distinct_count_hll"](spark, sf).collect()
-    }
-    assert est == ref
-
-
 def test_cms_merge_is_exactly_once_behind_the_ledger(spark, tmp_path):
     """CMS merge is SUM — redelivery would double-count — so the ledger
     must make a replayed batch id a no-op, while a NEW id still merges;
     and the maintained sketch must equal the batch-built one."""
-    from pyspark.sql import functions as F
-
     from datalakes_and_data_integration_spark.plans._util import T
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
         cms_rows,
-        merge_cms_state,
     )
 
     ev = T(spark, "/root/testdata/sf0.001", "events").select("user_id", "ts")
@@ -98,13 +59,13 @@ def test_cms_merge_is_exactly_once_behind_the_ledger(spark, tmp_path):
     b2 = ev.filter(F.col("ts") >= "2024-01-15")
     state = str(tmp_path / "cms_state")
 
-    merge_cms_state(spark, state, cms_rows(b1, "user_id"), batch_id=0)
-    merged = merge_cms_state(spark, state, cms_rows(b2, "user_id"), batch_id=1)
+    _merge_one(spark, state, cms_rows(b1, "user_id"), 0, _CMS)
+    merged = _merge_one(spark, state, cms_rows(b2, "user_id"), 1, _CMS)
     snapshot = {(r.seed, r.bucket): r.total for r in merged.collect()}
 
     # replayed ids: both are no-ops
     for bid, b in ((0, b1), (1, b2)):
-        replay = merge_cms_state(spark, state, cms_rows(b, "user_id"), bid)
+        replay = _merge_one(spark, state, cms_rows(b, "user_id"), bid, _CMS)
         assert {
             (r.seed, r.bucket): r.total for r in replay.collect()
         } == snapshot
@@ -117,21 +78,19 @@ def test_cms_merge_is_exactly_once_behind_the_ledger(spark, tmp_path):
     assert snapshot == full
 
     # a new id still merges (totals strictly grow somewhere)
-    again = merge_cms_state(spark, state, cms_rows(b1, "user_id"), batch_id=2)
+    again = _merge_one(spark, state, cms_rows(b1, "user_id"), 2, _CMS)
     grown = {(r.seed, r.bucket): r.total for r in again.collect()}
     assert sum(grown.values()) > sum(snapshot.values())
 
 
 def test_bitmap_merge_is_idempotent_without_a_ledger(spark, tmp_path):
-    """bit_or is idempotent: replaying ANY batch (no ledger involved)
-    must leave the state byte-identical, and the maintained words must
-    equal the batch-built words over the union."""
-    from pyspark.sql import functions as F
-
+    """bit_or is idempotent: replaying ANY batch under a NEW id (past
+    the ledger, so no ledger help) must leave the state byte-identical,
+    and the maintained words must equal the batch-built words over the
+    union."""
     from datalakes_and_data_integration_spark.plans._util import T
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        bitmap_words,
-        merge_bitmap_state,
+    from datalakes_and_data_integration_spark.plans.sketches import (
+        bitmap_word_rows,
     )
 
     ev = T(spark, "/root/testdata/sf0.001", "events").select(
@@ -141,64 +100,53 @@ def test_bitmap_merge_is_idempotent_without_a_ledger(spark, tmp_path):
     b2 = ev.filter(F.col("ts") >= "2024-01-15")
     state = str(tmp_path / "words")
 
-    merge_bitmap_state(spark, state, bitmap_words(b1, "event_type", "user_id"))
-    merged = merge_bitmap_state(
-        spark, state, bitmap_words(b2, "event_type", "user_id")
-    )
+    def words(b):
+        return bitmap_word_rows(b, "event_type", "user_id")
+
+    _merge_one(spark, state, words(b1), 0, _BITMAP)
+    merged = _merge_one(spark, state, words(b2), 1, _BITMAP)
     snapshot = {(r.grp, r.w): r.bits for r in merged.collect()}
 
-    for b in (b1, b2, b1):  # replay both, in any order
-        replay = merge_bitmap_state(
-            spark, state, bitmap_words(b, "event_type", "user_id")
-        )
+    # replay both, in any order, each under an id the ledger never saw
+    for bid, b in ((2, b1), (3, b2), (4, b1)):
+        replay = _merge_one(spark, state, words(b), bid, _BITMAP)
         assert {(r.grp, r.w): r.bits for r in replay.collect()} == snapshot
 
-    full = {
-        (r.grp, r.w): r.bits
-        for r in bitmap_words(ev, "event_type", "user_id").collect()
-    }
+    full = {(r.grp, r.w): r.bits for r in words(ev).collect()}
     assert snapshot == full
 
 
 def test_triptych_reports_share_one_maintained_state_root(spark, tmp_path):
     """Operational composition (VERDICT r7 next-round #7): ONE state
-    root maintains all three sketch families across two batches, then
-    the CMS heavy-hitter estimates, the bitmap distinct report, and the
-    HLL estimates are all served from that SAME maintained state; a
-    replayed batch 0 (CMS: ledger no-op; bitmap: OR idempotence; HLL:
-    max idempotence) leaves every report byte-identical, and each
-    maintained report equals its batch-built-from-scratch twin."""
+    root maintains the CMS and bitmap families across two batches,
+    then the CMS heavy-hitter estimates and the bitmap distinct report
+    are served from that SAME maintained state; a replayed batch 0
+    (CMS: ledger no-op under its old id; bitmap: OR idempotence under
+    a new id, past the ledger) leaves every report byte-identical, and
+    each maintained report equals its batch-built-from-scratch twin."""
     from datalakes_and_data_integration_spark.plans.sketches import (
         bitmap_popcount_report,
+        bitmap_word_rows,
     )
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        bitmap_words,
         cms_lookup,
         cms_rows,
-        hll_estimate,
-        hll_registers,
-        merge_bitmap_state,
-        merge_cms_state,
-        merge_hll_state,
     )
 
     root = tmp_path / "state"
     cms_dir = str(root / "cms")
     bm_dir = str(root / "words")
-    hll_dir = str(root / "hll")
 
     ev = _events(spark)
     b1 = ev.filter(F.col("event_id") % 2 == 0)
     b2 = ev.filter(F.col("event_id") % 2 == 1)
 
+    def words(b):
+        return bitmap_word_rows(b, "event_type", "user_id")
+
     for i, b in enumerate((b1, b2)):
-        sk = merge_cms_state(spark, cms_dir, cms_rows(b, "user_id"), i)
-        wd = merge_bitmap_state(
-            spark, bm_dir, bitmap_words(b, "event_type", "user_id")
-        )
-        hl = merge_hll_state(
-            spark, hll_dir, hll_registers(b, "event_type", "user_id")
-        )
+        sk = _merge_one(spark, cms_dir, cms_rows(b, "user_id"), i, _CMS)
+        wd = _merge_one(spark, bm_dir, words(b), i, _BITMAP)
 
     top = (
         ev.groupBy("user_id")
@@ -207,7 +155,7 @@ def test_triptych_reports_share_one_maintained_state_root(spark, tmp_path):
         .limit(5)
     )
 
-    def reports(sk, wd, hl):
+    def reports(sk, wd):
         cms = sorted(
             (r.user_id, r.cnt, r.cms_est)
             for r in cms_lookup(top, sk, "user_id").collect()
@@ -216,36 +164,23 @@ def test_triptych_reports_share_one_maintained_state_root(spark, tmp_path):
             (r.event_type, r.n_users)
             for r in bitmap_popcount_report(wd, "event_type").collect()
         )
-        est = sorted(
-            (r.grp, r.hll_est) for r in hll_estimate(hl).collect()
-        )
-        return cms, bm, est
+        return cms, bm
 
-    first = reports(sk, wd, hl)
+    first = reports(sk, wd)
 
-    # replay batch 0 against the same root: all three must be no-ops
-    sk2 = merge_cms_state(spark, cms_dir, cms_rows(b1, "user_id"), 0)
-    wd2 = merge_bitmap_state(
-        spark, bm_dir, bitmap_words(b1, "event_type", "user_id")
-    )
-    hl2 = merge_hll_state(
-        spark, hll_dir, hll_registers(b1, "event_type", "user_id")
-    )
-    assert reports(sk2, wd2, hl2) == first
+    # replay batch 0 against the same root: both must be no-ops
+    sk2 = _merge_one(spark, cms_dir, cms_rows(b1, "user_id"), 0, _CMS)
+    wd2 = _merge_one(spark, bm_dir, words(b1), 2, _BITMAP)
+    assert reports(sk2, wd2) == first
 
     # maintained == batch-built, family by family
     batch_sk = cms_rows(ev, "user_id")
     m = {(r.seed, r.bucket): r.total for r in sk2.collect()}
     b = {(r.seed, r.bucket): r.total for r in batch_sk.collect()}
     assert m == b
-    batch_wd = bitmap_words(ev, "event_type", "user_id")
     mw = {(r.grp, r.w): r.bits for r in wd2.collect()}
-    bw = {(r.grp, r.w): r.bits for r in batch_wd.collect()}
+    bw = {(r.grp, r.w): r.bits for r in words(ev).collect()}
     assert mw == bw
-    batch_hll = hll_registers(ev, "event_type", "user_id")
-    mh = {(r.grp, r.reg): r.mrho for r in hl2.collect()}
-    bh = {(r.grp, r.reg): r.mrho for r in batch_hll.collect()}
-    assert mh == bh
 
 
 def test_entry_gc_removes_orphaned_staged_sketch_dirs(spark, tmp_path):
@@ -259,21 +194,22 @@ def test_entry_gc_removes_orphaned_staged_sketch_dirs(spark, tmp_path):
 
     from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
         cms_rows,
-        merge_cms_state,
     )
 
     ev = _events(spark)
     state = str(tmp_path / "cms")
-    merge_cms_state(
-        spark, state, cms_rows(ev.filter("event_id % 2 = 0"), "user_id"), 0
+    _merge_one(
+        spark, state, cms_rows(ev.filter("event_id % 2 = 0"), "user_id"), 0,
+        _CMS,
     )
     committed = json.load(open(os.path.join(state, "COMMIT.json")))["sketch"]
     # simulate the crash: an uncommitted staged dir from a dead attempt
     orphan = os.path.join(state, "sketch-999999-dead")
     os.makedirs(orphan)
     open(os.path.join(orphan, "part-0.parquet"), "w").write("junk")
-    merged = merge_cms_state(
-        spark, state, cms_rows(ev.filter("event_id % 2 = 1"), "user_id"), 1
+    merged = _merge_one(
+        spark, state, cms_rows(ev.filter("event_id % 2 = 1"), "user_id"), 1,
+        _CMS,
     )
     names = sorted(
         e for e in os.listdir(state) if e.startswith("sketch-")
@@ -294,46 +230,28 @@ def test_entry_gc_removes_orphaned_staged_sketch_dirs(spark, tmp_path):
 
 
 def test_minmax_merge_replay_is_noop_by_algebra(spark, tmp_path):
-    """ledgered_minmax_merge: the ledger skips a replayed id, but the
-    ALGEBRA is what guarantees exactly-once — force-remerging the same
-    batch past the ledger (fresh state dir, same batch twice under
-    different ids) leaves the state byte-identical."""
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_minmax_merge,
-    )
-
+    """Min/max state: the ledger skips a replayed id, but the ALGEBRA
+    is what guarantees exactly-once — force-remerging the same batch
+    past the ledger (same batch twice under different ids) leaves the
+    state byte-identical."""
     batch = spark.createDataFrame(
         [(1, "a", 3, None, 5), (2, "a", 0, 2, 9)],
         "user_id INT, arm STRING, enroll_week INT, conv_week INT,"
         " last_week INT",
     )
-    kw = dict(
-        key_cols=["user_id", "arm"],
-        min_cols=["enroll_week", "conv_week"],
-        max_cols=["last_week"],
-    )
     s1 = str(tmp_path / "ledgered")
-    m1 = ledgered_minmax_merge(spark, s1, batch, batch_id=0, **kw)
+    m1 = _merge_one(spark, s1, batch, 0, _MINMAX)
     one = sorted(map(tuple, m1.collect()))
     # replayed id: ledger short-circuits
-    m2 = ledgered_minmax_merge(spark, s1, batch, batch_id=0, **kw)
+    m2 = _merge_one(spark, s1, batch, 0, _MINMAX)
     assert sorted(map(tuple, m2.collect())) == one
     # force past the ledger: same rows under a DIFFERENT batch id —
     # min/min/max absorb the duplicate delivery with no ledger help
-    m3 = ledgered_minmax_merge(spark, s1, batch, batch_id=1, **kw)
+    m3 = _merge_one(spark, s1, batch, 1, _MINMAX)
     assert sorted(map(tuple, m3.collect())) == one
 
 
 def test_minmax_merge_merges_across_batches(spark, tmp_path):
-    from datalakes_and_data_integration_spark.streaming.sketch_maintenance import (
-        ledgered_minmax_merge,
-    )
-
-    kw = dict(
-        key_cols=["user_id", "arm"],
-        min_cols=["enroll_week", "conv_week"],
-        max_cols=["last_week"],
-    )
     s = str(tmp_path / "st")
     b0 = spark.createDataFrame(
         [(1, "a", 3, None, 3)],
@@ -345,8 +263,8 @@ def test_minmax_merge_merges_across_batches(spark, tmp_path):
         "user_id INT, arm STRING, enroll_week INT, conv_week INT,"
         " last_week INT",
     )
-    ledgered_minmax_merge(spark, s, b0, batch_id=0, **kw)
-    m = ledgered_minmax_merge(spark, s, b1, batch_id=1, **kw)
+    _merge_one(spark, s, b0, 0, _MINMAX)
+    m = _merge_one(spark, s, b1, 1, _MINMAX)
     rows = m.collect()
     assert len(rows) == 1
     r = rows[0]
