@@ -26,7 +26,6 @@ from datalakes_and_data_integration_spark.operators.impute import (
 )
 from datalakes_and_data_integration_spark.operators.convert import (
     horizontal_sum,
-    map_convert,
 )
 from datalakes_and_data_integration_spark.operators.windows import (
     bfill_rev,
@@ -48,7 +47,6 @@ __all__ = [
     "impute_mean",
     "mean_exprs",
     "horizontal_sum",
-    "map_convert",
     "bfill_rev",
     "ffill",
     "lag_diff",

@@ -1,44 +1,19 @@
-"""Value-map conversion and horizontal aggregation (reference F4/F5/A4).
+"""Horizontal aggregation (reference A4).
 
-- ``map_convert``: the reference maps unit strings to factors through a dict
-  where unmapped units become NaN, nulling the converted value
-  (`/root/reference/src/process_to_curated.py:35-39,57-66`). Spark: a
-  ``CASE WHEN`` chain (or ``create_map``) — unmatched -> null, same
-  semantics, fully codegen'd.
-- ``horizontal_sum``: row-wise NaN-skipping sum across a column group; the
-  reference uses a per-row Python loop (`process_to_curated.py:84-94`) or
-  ``np.nansum`` with an all-null->NaN guard (`faster_process_to_curated.py:
-  68-82`). Spark: ``coalesce(c, 0) + ...`` with a guard that yields null when
-  every input is null — a narrow projection, no shuffle at any scale.
+``horizontal_sum``: row-wise NaN-skipping sum across a column group; the
+reference uses a per-row Python loop (`process_to_curated.py:84-94`) or
+``np.nansum`` with an all-null->NaN guard (`faster_process_to_curated.py:
+68-82`). Spark: ``coalesce(c, 0) + ...`` with a guard that yields null when
+every input is null — a narrow projection, no shuffle at any scale.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def map_convert(
-    df: DataFrame,
-    value_col: str,
-    key_col: str,
-    factors: Mapping[str, float],
-    out_col: str,
-) -> DataFrame:
-    """``out = value * factors[key]``; unmapped key -> null (reference F4)."""
-    expr: Column = F.lit(None).cast("double")
-    # Build when-chain in deterministic (sorted) key order.
-    chain = None
-    for k in sorted(factors):
-        cond = F.col(key_col) == k
-        chain = F.when(cond, F.lit(factors[k])) if chain is None else chain.when(
-            cond, F.lit(factors[k])
-        )
-    factor = chain.otherwise(expr) if chain is not None else expr
-    return df.withColumn(out_col, F.col(value_col) * factor)
 
 
 def horizontal_sum(cols: Sequence[str | Column]) -> Column:

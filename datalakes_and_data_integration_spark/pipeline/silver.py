@@ -104,45 +104,3 @@ def build_silver(
     )
     return spark.read.schema(df.schema).parquet(silver_dir)
 
-
-def build_silver_incremental(
-    spark: SparkSession,
-    bronze_dir: str,
-    silver_dir: str,
-    ingest_dates: list[str] | None = None,
-) -> DataFrame:
-    """Incremental silver: process only the given bronze ``ingest_date``
-    partitions and MERGE them into the existing silver table.
-
-    This is the reference's actual operating mode (SURVEY.md §2.8): every
-    day re-fetch the last 3 days, re-process the overlap, and let
-    first-writer-wins drop rows whose PK already landed — an *updated*
-    value for an existing (code_site, date_de_debut) is dropped, not
-    upserted, exactly like the Cassandra LWT. Here the overlap never
-    leaves the bronze scan (partition pruning on ingest_date) and the
-    MERGE is operators.upsert.merge_new_only.
-    """
-    from datalakes_and_data_integration_spark.operators.upsert import (
-        upsert_parquet,
-    )
-
-    bronze = spark.read.parquet(bronze_dir)
-    if ingest_dates:
-        bronze = bronze.filter(F.col("ingest_date").isin(ingest_dates))
-    df = normalize_columns(bronze)
-    data_cols = [c for c in df.columns if c not in ("pollutant_code", "ingest_date")]
-    df = drop_empty_rows(df, data_cols)
-    df = typed_cast(df)
-    df = dedup_full_row(df)
-    tiebreak = [F.col("ingest_date").asc_nulls_last()] + [
-        F.col(c).asc_nulls_last()
-        for c in sorted(df.columns)
-        if c != "ingest_date"
-    ]
-    return upsert_parquet(
-        spark,
-        silver_dir,
-        df,
-        keys=["pollutant_code", *PK],
-        order_by=tiebreak,
-    )

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T, dec
+from datalakes_and_data_integration_spark.plans._util import T, dec, state_tmp
 from datalakes_and_data_integration_spark.plans.registry import register
 
 # Daily-rollup maintenance scenario over the 2024-01-01..30 events table:
@@ -58,7 +58,6 @@ _HIGH_WATER = "2024-01-28"  # rollup covers ts < this after maintenance
 )
 def continuous_aggregate_daily(spark, sf_dir):
     import os
-    import tempfile
 
     from datalakes_and_data_integration_spark.operators.rollup import (
         finalize_rollup,
@@ -71,7 +70,7 @@ def continuous_aggregate_daily(spark, sf_dir):
     bucket = F.col("ts").cast("date")
     keys = ["event_type"]
 
-    root = tempfile.mkdtemp(prefix="contagg_")
+    root = state_tmp("contagg")
     gen = os.path.join(root, "gen0")
     write_rollup(
         partial_rollup(e.filter(F.col("ts") < _HISTORY_END), bucket, keys),
@@ -79,8 +78,7 @@ def continuous_aggregate_daily(spark, sf_dir):
     )
     # Nightly maintenance: merge one day's partials per generation. A new
     # generation dir per merge because parquet can't be overwritten while
-    # it is the read side (operators/upsert.py uses the same staged-swap
-    # idea with tombstones for in-place tables).
+    # it is the read side.
     days = [*_INCREMENT_DAYS, _HIGH_WATER]
     for i, (day, nxt) in enumerate(zip(days, days[1:] + [None])):
         if nxt is None:
@@ -379,7 +377,7 @@ def _zorder_oracle() -> str:
     "exists in the plan; the oracle is the naive one-window ROW_NUMBER, "
     "and the driver hash match proves the two-pass form equal. At 100 TB "
     "the physical rewrite is repartitionByRange(z) + sortWithinPartitions "
-    "(sinks.write_clustered); this query is its planning/audit half.",
+    "(z) on the same code; this query is its planning/audit half.",
     tags=("layout", "maintenance", "zorder", "scale"),
 )
 def zorder_layout_plan(spark, sf_dir):

@@ -2433,8 +2433,8 @@ def top_user_journeys(spark, sf_dir):
 # numbering/lead runs over the (much smaller) change rows, which keep
 # the same partitioning so no second exchange. The rebuild-from-log form
 # is the batch/backfill path; the incremental path at 100 TB is the
-# registered streaming upsert (operators/upsert.py) applying the same
-# change rule per micro-batch.
+# registered streaming_scd2_upsert (streaming/incremental_scd2.py)
+# applying the same change rule per micro-batch.
 # ---------------------------------------------------------------------------
 
 

@@ -161,121 +161,3 @@ def write_postgres_copy(
     )
     return len(pdf)
 
-
-def compact_parquet(
-    spark,
-    table_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_within: Sequence[str] = (),
-) -> int:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(total_bytes / target) files (the OPTIMIZE half of Delta's
-    OPTIMIZE/ZORDER; pair with operators.layout.zorder_layout for the
-    clustering half).
-
-    Small files are the silent killer of 100 TB scans — every file costs a
-    task, a footer read, and an object-store request; streaming and
-    incremental writers produce them constantly. Returns the new file
-    count. Crash-safe via the upsert sinks' tombstone swap.
-    """
-    import math
-    import os
-    import shutil
-    import tempfile
-
-    from datalakes_and_data_integration_spark.operators.upsert import swap_dir
-
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(table_dir)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(table_dir)
-    out = df.repartition(n_files)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    staging = tempfile.mkdtemp(
-        prefix=".compact_", dir=os.path.dirname(table_dir) or "."
-    )
-    tmp = os.path.join(staging, "data")
-    out.write.mode("overwrite").parquet(tmp)
-    swap_dir(tmp, table_dir)
-    shutil.rmtree(staging, ignore_errors=True)
-    return len(
-        [f for f in os.listdir(table_dir) if f.endswith(".parquet")]
-    )
-
-
-def plan_compaction(
-    sizes: dict[str, int],
-    target_file_bytes: int = 128 * 1024 * 1024,
-    small_ratio: float = 0.5,
-) -> list[list[str]]:
-    """Select and batch undersized files for selective compaction.
-
-    ``compact_parquet`` rewrites the whole table — right after a bulk
-    load, wrong as maintenance: at 100 TB you only want to touch the
-    files that are actually small (streaming commits, incremental
-    upserts), not rewrite healthy 128 MB files to fix a thousand 1 MB
-    ones. This is the planner half: files under ``small_ratio * target``
-    are packed first-fit-decreasing into batches of ~``target`` bytes;
-    every returned batch merges to one right-sized file and each batch is
-    an independent unit of work (parallelizable, resumable).
-
-    Pure function over a {path: bytes} listing — works the same against a
-    local directory walk or an object-store inventory. Files >= the small
-    threshold are never touched. A single undersized file still forms a
-    batch only when there is something to merge it with — a lone small
-    file is left in place (rewriting it buys nothing).
-    """
-    small = sorted(
-        (
-            (p, sz)
-            for p, sz in sizes.items()
-            if sz < small_ratio * target_file_bytes
-        ),
-        key=lambda kv: (-kv[1], kv[0]),
-    )
-    paths_of: list[list[str]] = []
-    size_of: list[int] = []
-    for path, sz in small:
-        for i, used in enumerate(size_of):
-            if used + sz <= target_file_bytes:
-                paths_of[i].append(path)
-                size_of[i] = used + sz
-                break
-        else:
-            paths_of.append([path])
-            size_of.append(sz)
-    return [paths for paths in paths_of if len(paths) > 1]
-
-
-def compact_selected(spark, table_dir: str, batch: list[str]) -> str:
-    """Merge one planned batch into a single right-sized file in place.
-
-    Write-then-delete ordering: the merged file lands under a unique name
-    first, the originals are removed after — a crash in between leaves
-    duplicate rows (visible, recoverable) rather than lost rows. True
-    isolation for concurrent readers needs a table format's snapshot
-    commit (Delta/Iceberg); this is the raw-parquet-directory best case,
-    same trade as the reference's raw zone.
-    """
-    import os
-    import shutil
-    import uuid
-
-    staging = os.path.join(table_dir, f".compact-{uuid.uuid4().hex}")
-    spark.read.parquet(*batch).coalesce(1).write.mode("overwrite").parquet(
-        staging
-    )
-    part = next(
-        f for f in os.listdir(staging) if f.endswith(".parquet")
-    )
-    final = os.path.join(table_dir, f"compacted-{uuid.uuid4().hex}.parquet")
-    os.replace(os.path.join(staging, part), final)
-    shutil.rmtree(staging)
-    for p in batch:
-        os.remove(p)
-    return final

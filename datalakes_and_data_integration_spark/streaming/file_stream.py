@@ -13,12 +13,11 @@ backfill); watermark 2h bounds state growth for continuous runs.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datalakes_and_data_integration_spark.plans._util import T, dec
+from datalakes_and_data_integration_spark.plans._util import T, dec, state_tmp
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,7 +69,7 @@ def run_available_now(
 ) -> DataFrame:
     """Run the streaming query to completion (AvailableNow) into a memory
     sink and return the result as a batch DataFrame."""
-    checkpoint = tempfile.mkdtemp(prefix="ckpt_")
+    checkpoint = state_tmp(f"ckpt_{name}")
     q = (
         agg.writeStream.format("memory")
         .queryName(name)

@@ -1,4 +1,4 @@
-"""Tests for the ingest API (reference S7-S10) and keyed upsert (S15)."""
+"""Tests for the ingest API (reference S7-S10)."""
 
 from __future__ import annotations
 
@@ -6,12 +6,6 @@ import json
 import urllib.request
 import uuid
 
-from pyspark.sql import functions as F
-
-from datalakes_and_data_integration_spark.operators.upsert import (
-    merge_new_only,
-    upsert_parquet,
-)
 from datalakes_and_data_integration_spark.sources.ingest_api import serve
 
 
@@ -72,135 +66,6 @@ def test_ingest_api_stores_and_triggers(tmp_path):
         assert status == 200 and out["accepted"] == 2
     finally:
         server.shutdown()
-
-
-def test_merge_new_only_first_writer_wins(spark):
-    existing = spark.createDataFrame(
-        [("s1", 1, "old")], ["site", "t", "payload"]
-    )
-    updates = spark.createDataFrame(
-        [
-            ("s1", 1, "clobber-attempt"),  # key exists -> dropped (LWT)
-            ("s1", 2, "b-first"),
-            ("s1", 2, "a-dup-second"),  # in-batch dup -> deterministic winner
-            ("s2", 1, "new-site"),
-        ],
-        ["site", "t", "payload"],
-    )
-    out = merge_new_only(
-        existing, updates, keys=["site", "t"], order_by=[F.col("payload")]
-    ).orderBy("site", "t")
-    rows = [(r.site, r.t, r.payload) for r in out.collect()]
-    assert rows == [
-        ("s1", 1, "old"),  # existing row wins over the update
-        ("s1", 2, "a-dup-second"),  # smallest payload under the order
-        ("s2", 1, "new-site"),
-    ]
-
-
-def test_upsert_parquet_roundtrip(spark, tmp_path):
-    table = str(tmp_path / "t")
-    b1 = spark.createDataFrame([("k1", "v1"), ("k2", "v2")], ["k", "v"])
-    upsert_parquet(spark, table, b1, keys=["k"])
-    b2 = spark.createDataFrame([("k2", "CLOBBER"), ("k3", "v3")], ["k", "v"])
-    out = upsert_parquet(spark, table, b2, keys=["k"])
-    rows = {(r.k, r.v) for r in out.collect()}
-    assert rows == {("k1", "v1"), ("k2", "v2"), ("k3", "v3")}
-
-
-def test_scd2_merge_versions_history(spark):
-    import datetime as dt
-
-    from datalakes_and_data_integration_spark.operators.upsert import (
-        scd2_merge,
-    )
-
-    t1 = dt.datetime(2024, 1, 1)
-    t2 = dt.datetime(2024, 6, 1)
-
-    # Initial load: two customers.
-    b1 = spark.createDataFrame(
-        [(1, "BUILDING", t1), (2, "MACHINERY", t1)],
-        ["custkey", "segment", "eff"],
-    )
-    dim = scd2_merge(None, b1, "custkey", ["segment"], "eff")
-    assert dim.count() == 2 and dim.filter("is_current").count() == 2
-
-    # Batch 2: customer 1 changes segment, customer 2 unchanged, 3 is new.
-    b2 = spark.createDataFrame(
-        [(1, "AUTOMOBILE", t2), (2, "MACHINERY", t2), (3, "HOUSEHOLD", t2)],
-        ["custkey", "segment", "eff"],
-    )
-    dim2 = scd2_merge(dim, b2, "custkey", ["segment"], "eff")
-    rows = {
-        (r.custkey, r.segment, r.is_current): (r.valid_from, r.valid_to)
-        for r in dim2.collect()
-    }
-    assert len(rows) == 4  # 1-old, 1-new, 2 (untouched), 3 (new key)
-    assert rows[(1, "BUILDING", False)] == (t1, t2)  # closed at change time
-    assert rows[(1, "AUTOMOBILE", True)][0] == t2
-    assert (2, "MACHINERY", True) in rows  # unchanged row untouched
-    assert rows[(2, "MACHINERY", True)][0] == t1  # original valid_from kept
-    assert (3, "HOUSEHOLD", True) in rows
-
-
-def test_scd2_merge_duplicate_keys_in_batch(spark):
-    """A batch with several rows per key must not fan the full join out
-    (multiple closed copies / multiple is_current rows): the latest
-    effective_ts per key wins."""
-    import datetime as dt
-
-    from datalakes_and_data_integration_spark.operators.upsert import (
-        scd2_merge,
-    )
-
-    t1, t2, t3 = (
-        dt.datetime(2024, 1, 1),
-        dt.datetime(2024, 6, 1),
-        dt.datetime(2024, 9, 1),
-    )
-    dim = scd2_merge(
-        None,
-        spark.createDataFrame([(1, "BUILDING", t1)], ["custkey", "segment", "eff"]),
-        "custkey",
-        ["segment"],
-        "eff",
-    )
-    batch = spark.createDataFrame(
-        [(1, "AUTOMOBILE", t2), (1, "HOUSEHOLD", t3)],  # two updates, one key
-        ["custkey", "segment", "eff"],
-    )
-    out = scd2_merge(dim, batch, "custkey", ["segment"], "eff").collect()
-    current = [r for r in out if r.is_current]
-    assert len(current) == 1  # exactly one open version
-    assert current[0].segment == "HOUSEHOLD"  # the later update won
-    closed = [r for r in out if not r.is_current]
-    assert len(closed) == 1  # exactly one closed copy of BUILDING
-    assert closed[0].valid_to == t3
-
-
-def test_swap_dir_tombstone_rollback(spark, tmp_path):
-    import os
-
-    from datalakes_and_data_integration_spark.operators.upsert import swap_dir
-
-    table = tmp_path / "t"
-    table.mkdir()
-    (table / "old.txt").write_text("old")
-    staged = tmp_path / "staged"
-    staged.mkdir()
-    (staged / "new.txt").write_text("new")
-    swap_dir(str(staged), str(table))
-    assert (table / "new.txt").read_text() == "new"
-    assert not os.path.isdir(str(table) + ".tombstone")  # cleaned up
-
-    # A failed move must roll the tombstone back so the table survives.
-    missing_staged = str(tmp_path / "does_not_exist")
-    try:
-        swap_dir(missing_staged, str(table))
-    except Exception:
-        pass
-    assert (table / "new.txt").read_text() == "new"  # table still intact
 
 
 def test_salted_join_rejects_outer(spark):

@@ -16,7 +16,6 @@ from datalakes_and_data_integration_spark.operators import (
     impute_mean,
     lag_diff,
     lag_pct_change,
-    map_convert,
     normalize_column_name,
     normalize_columns,
     prefix_columns,
@@ -85,16 +84,6 @@ class TestImpute:
 
 
 class TestConvert:
-    # Reference F4: unmapped unit -> null (process_to_curated.py:35-39).
-    def test_unmapped_factor_nulls(self, spark):
-        df = spark.createDataFrame(
-            [(1.0, "mg-m3"), (2.0, "µg/m3")], ["v", "unit"]
-        )
-        out = map_convert(df, "v", "unit", {"mg-m3": 1e-3}, "g").collect()
-        got = {r.unit: r.g for r in out}
-        assert got["mg-m3"] == 1e-3
-        assert got["µg/m3"] is None
-
     # Reference A4: NaN-skipping horizontal sum, all-null -> null
     # (faster_process_to_curated.py:77-80 guard).
     def test_horizontal_sum(self, spark):

@@ -160,12 +160,10 @@ def test_gold_impute_before_convert(zones):
     )
 
 
-def test_silver_incremental_idempotent(spark, tmp_path):
+def test_silver_refetch_is_first_writer_wins(spark, tmp_path):
     """Re-ingesting an overlapping window must not duplicate or update rows
-    (the reference's LWT idempotency, SURVEY.md §2.8)."""
-    from datalakes_and_data_integration_spark.pipeline.silver import (
-        build_silver_incremental,
-    )
+    (the reference's LWT idempotency, SURVEY.md §2.8): the ingest_date
+    tiebreak keeps the first write of every re-fetched key."""
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -175,9 +173,7 @@ def test_silver_incremental_idempotent(spark, tmp_path):
     )
     work = tmp_path / "zones"
     build_bronze(spark, str(landing), f"{work}/bronze")
-    s1 = build_silver_incremental(
-        spark, f"{work}/bronze", f"{work}/silver", ingest_dates=["2025-03-07"]
-    )
+    s1 = build_silver(spark, f"{work}/bronze", f"{work}/silver")
     assert s1.count() == 4
 
     # Day 2 re-fetches day 1 (values CHANGED upstream -> must be dropped,
@@ -191,9 +187,7 @@ def test_silver_incremental_idempotent(spark, tmp_path):
         "\n".join(day1_again + day2), encoding="utf-8"
     )
     build_bronze(spark, str(landing), f"{work}/bronze")
-    s2 = build_silver_incremental(
-        spark, f"{work}/bronze", f"{work}/silver", ingest_dates=["2025-03-08"]
-    )
+    s2 = build_silver(spark, f"{work}/bronze", f"{work}/silver")
     assert s2.count() == 7  # 4 original + 3 new; the 4 re-fetched dropped
     vals = {
         (str(r.date_de_debut), r.valeur)

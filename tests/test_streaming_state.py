@@ -158,3 +158,27 @@ def test_session_state_spans_micro_batches(spark):
     r = rows[0]
     assert r.user_id == 1 and r.n_events == 3
     assert r.session_start == mk(0) and r.session_end == mk(15)
+
+
+def test_run_available_now_reuses_one_checkpoint_dir(spark, tmp_path, monkeypatch):
+    """A long-lived session must not leak one checkpoint directory per
+    streaming run: repeated runs share one per-process checkpoint."""
+    from datalakes_and_data_integration_spark.streaming.file_stream import (
+        run_available_now,
+    )
+
+    src = tmp_path / "src"
+    spark.createDataFrame([("a",), ("a",), ("b",)], ["k"]).coalesce(1).write.parquet(
+        str(src)
+    )
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    for _ in range(2):
+        agg = spark.readStream.schema("k string").parquet(str(src)).groupBy("k").count()
+        out = run_available_now(agg, spark, name="ckpt_leak_test")
+        assert {(r.k, r["count"]) for r in out.collect()} == {("a", 2), ("b", 1)}
+
+    assert not [p.name for p in tmp.iterdir() if p.name.startswith("ckpt_")]
+    assert len([p for p in tmp.rglob("ckpt_*") if p.is_dir()]) == 1
