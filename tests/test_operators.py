@@ -21,6 +21,7 @@ from datalakes_and_data_integration_spark.operators import (
     prefix_columns,
 )
 from datalakes_and_data_integration_spark.operators.windows import ordered_window
+from datalakes_and_data_integration_spark.pipeline.gold import _unit_factor_col
 
 
 class TestNormalize:
@@ -84,6 +85,19 @@ class TestImpute:
 
 
 class TestConvert:
+    # Reference F4: unmapped unit -> null (process_to_curated.py:35-39),
+    # through the gold stage's unit-factor chain.
+    def test_unmapped_factor_nulls(self, spark):
+        df = spark.createDataFrame(
+            [(1.0, "mg-m3"), (2.0, "µg/m3")], ["v", "unit"]
+        )
+        out = df.withColumn(
+            "g", F.col("v") * _unit_factor_col("unit")
+        ).collect()
+        got = {r.unit: r.g for r in out}
+        assert got["mg-m3"] == 1e-3
+        assert got["µg/m3"] is None
+
     # Reference A4: NaN-skipping horizontal sum, all-null -> null
     # (faster_process_to_curated.py:77-80 guard).
     def test_horizontal_sum(self, spark):

@@ -160,7 +160,7 @@ def test_gold_impute_before_convert(zones):
     )
 
 
-def test_silver_refetch_is_first_writer_wins(spark, tmp_path):
+def test_silver_incremental_idempotent(spark, tmp_path):
     """Re-ingesting an overlapping window must not duplicate or update rows
     (the reference's LWT idempotency, SURVEY.md §2.8): the ingest_date
     tiebreak keeps the first write of every re-fetched key."""
